@@ -42,7 +42,7 @@ object Dedup {
     * hash gate doubles as a collision-freeness proof (same argument
     * as dd09).
     */
-  private def shingles(s: SparkSession, d: String): DataFrame =
+  private[graft] def shingles(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), expr(toksExpr).as("t"))
       .select(col("doc_id"), explode(array_distinct(
@@ -60,7 +60,7 @@ object Dedup {
   val dfCap = 1000
 
   /** Shingle inverted index with the df cap applied. */
-  private def cappedIndex(s: SparkSession, d: String): DataFrame = {
+  private[graft] def cappedIndex(s: SparkSession, d: String): DataFrame = {
     val sh = shingles(s, d)
     val rare = sh.groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap).select("s")
@@ -221,19 +221,6 @@ object Dedup {
     inter.toDouble / kk
   }
 
-  // stage-split probe surface for ScaleProbe dd02split (r22) — the
-  // private pipeline stages exposed read-only for measurement; no
-  // registered query consumes these
-  private[graft] def probeShingles(s: SparkSession, d: String): DataFrame =
-    shingles(s, d)
-  private[graft] def probeCappedIndex(s: SparkSession, d: String): DataFrame =
-    cappedIndex(s, d)
-  private[graft] def probePostings(s: SparkSession, d: String): DataFrame =
-    cappedIndex(s, d).groupBy("s")
-      .agg(sort_array(collect_set("doc_id")).as("ds"))
-  private[graft] def probePairs(s: SparkSession, d: String): DataFrame =
-    buildJaccardPairs(s, d)
-
   /** Unordered i<j pairs of every posting's sorted `ds` array, as flat
     * (id1, id2) rows with per-posting multiplicity preserved — the
     * shared pair generator behind dd02 and dd09. TWO-LEVEL INDEX
@@ -242,10 +229,10 @@ object Dedup {
     * posting's full pair array before Generate could stream it; two
     * chained explodes over int `sequence`s plus an `element_at`
     * projection stay inside whole-stage codegen end to end and never
-    * materialize a pair array (ScaleProbe dd02pack, end-to-end to
-    * scored pairs at sf0.1: slice+struct 2.72 s, index lambdas 2.19,
-    * packed-long 2.09 — still constrained to ids < 2^32, still not
-    * shipped — two-level explode **1.73 s**, pair sets verified
+    * materialize a pair array (measured end-to-end to scored pairs at
+    * sf0.1: slice+struct 2.72 s, index lambdas 2.19, packed-long 2.09
+    * — still constrained to ids < 2^32, still not shipped — two-level
+    * explode **1.73 s**, pair sets verified
     * identical). Postings larger than `chunk` are cut into sorted
     * chunks and spread per CHUNK-PAIR row exactly as before (the
     * hot-shingle salt guard); `sequence` args are arranged so no
@@ -287,7 +274,7 @@ object Dedup {
     small.unionAll(big)
   }
 
-  private def buildJaccardPairs(s: SparkSession, d: String): DataFrame = {
+  private[graft] def buildJaccardPairs(s: SparkSession, d: String): DataFrame = {
     // no explicit cache: the shingle subplan appears three times in
     // this one plan and Spark's ReuseExchange already dedupes it —
     // measured faster than materializing with .cache()
@@ -572,12 +559,11 @@ object Dedup {
   // are delta-sized; the index side remains a sequential exchange-
   // free streamed scan, whose IO grows with index bytes but never
   // re-shuffles or re-sorts the corpus (the naive re-dedup pays a
-  // corpus-sized shuffle per batch — measured in ScaleProbe `incr`,
-  // PLANS.md R5). The deterministic split
-  // here stands in for ingest time: base = doc_id % 10 < 8 (already
-  // ingested), delta = the rest (arriving batch). Output = the
-  // delta's genuinely-new fingerprints with the surviving doc and
-  // the delta-internal copy count.
+  // corpus-sized shuffle per batch — measured in PLANS.md R5). The
+  // deterministic split here stands in for ingest time: base =
+  // doc_id % 10 < 8 (already ingested), delta = the rest (arriving
+  // batch). Output = the delta's genuinely-new fingerprints with the
+  // surviving doc and the delta-internal copy count.
   val deltaMod = 10
   val deltaFrom = 8
 

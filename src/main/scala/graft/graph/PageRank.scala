@@ -208,30 +208,7 @@ object PageRank {
     * Everything is keyed joins + aggregations — no windows, nothing
     * all-pairs beyond the bounded wedge set.
     */
-  def triangleCounts(edges: DataFrame): DataFrame =
-    triangleCountsImpl(edges, pinOriented = false)
-
-  private[graft] def triangleCountsImpl(edges: DataFrame,
-                                        pinOriented: Boolean): DataFrame =
-    triangleCountsImpl(edges, pinOriented, pinDeg = false, fanOut = true)
-
-  /** [[triangleCounts]] with an optional localCheckpoint pin on the
-    * `oriented` subtree, kept ONLY so ScaleProbe (`tripin`) can keep
-    * re-measuring the tradeoff. The wedge self-join reads `oriented`
-    * on both sides and ReusedExchange does NOT fire across the e1/e2
-    * subtrees (probe-verified: 0 nodes), so the two degree joins DO
-    * execute twice — but the recompute is measured CHEAPER than the
-    * pin on both probed graphs (co-purchase graph at sf0.1: 4.58 s
-    * unpinned vs 5.10 s pinned; 5M-edge ring+hub: 6.3 s vs 14.7 s;
-    * 20M: 27.8 s vs 39.7 s): the checkpoint's write-everything
-    * barrier plus the lost pipelining outweighs re-running two
-    * co-partitioned joins whose inputs (`und`, both shuffle-local)
-    * are already pinned. Production callers therefore do NOT pin.
-    */
-  private[graft] def triangleCountsImpl(edges: DataFrame,
-                                        pinOriented: Boolean,
-                                        pinDeg: Boolean,
-                                        fanOut: Boolean = true): DataFrame = {
+  def triangleCounts(edges: DataFrame): DataFrame = {
     // canonicalize INSIDE the operator rather than assuming a < b of
     // the caller: a mirrored duplicate edge (b, a) would survive a
     // plain distinct(), inflate both degrees, and silently miscount —
@@ -266,17 +243,24 @@ object PageRank {
     // consumes it FOUR times — da/db for e1's orientation and again
     // inside e2's broadcast subtree — with no ReusedExchange across
     // those consumers, so the 2m-row union + aggregation runs four
-    // times. Pinning it with an eager checkpoint was PROBED AND LOSES
-    // (ScaleProbe `trideg`, co-purchase graph at sf0.1: 11.76 s pinned
-    // vs 9.82 unpinned medians): AQE materializes the four redundant
-    // subtrees as CONCURRENT broadcast-build stages, so their wall
-    // cost mostly overlaps, while the eager pin serializes a blocking
-    // job in front of every downstream stage. `pinDeg` exists ONLY so
-    // ScaleProbe (`trideg`) can keep re-measuring the trade.
-    val degPlan = und.select(col("a").as("n")).unionAll(und.select(col("b").as("n")))
+    // times. Pinning it with an eager checkpoint was measured and
+    // loses (co-purchase graph at sf0.1: 11.76 s pinned vs 9.82
+    // unpinned medians): AQE materializes the four redundant subtrees
+    // as CONCURRENT broadcast-build stages, so their wall cost mostly
+    // overlaps, while the eager pin serializes a blocking job in front
+    // of every downstream stage.
+    val deg = und.select(col("a").as("n")).unionAll(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
-    val deg = if (pinDeg) degPlan.localCheckpoint() else degPlan
-    val orientedPlan = und
+    // The wedge self-join reads `oriented` on both sides and
+    // ReusedExchange does NOT fire across the e1/e2 subtrees, so the
+    // two degree joins execute twice — but that recompute was measured
+    // CHEAPER than a localCheckpoint pin on `oriented` (co-purchase
+    // graph at sf0.1: 4.58 s unpinned vs 5.10 s pinned; 5M-edge
+    // ring+hub: 6.3 s vs 14.7 s; 20M: 27.8 s vs 39.7 s): the
+    // checkpoint's write-everything barrier plus the lost pipelining
+    // outweighs re-running two co-partitioned joins whose input
+    // (`und`) is already pinned.
+    val oriented = und
       .join(maybeBcast(deg.withColumnRenamed("n", "a").withColumnRenamed("deg", "da")), "a")
       .join(maybeBcast(deg.withColumnRenamed("n", "b").withColumnRenamed("deg", "db")), "b")
       .select(
@@ -284,7 +268,6 @@ object PageRank {
           col("a")).otherwise(col("b")).as("src"),
         when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
           col("b")).otherwise(col("a")).as("dst"))
-    val oriented = if (pinOriented) orientedPlan.localCheckpoint() else orientedPlan
     // FAN OUT the generator stage (r22 follow-up): on the broadcast
     // path the wedge enumeration + closing probe + partial aggregation
     // fuse into ONE stage whose partitioning is inherited from the
@@ -293,10 +276,10 @@ object PageRank {
     // while each task enumerates its share of the O(m^1.5) wedge set.
     // Generator-heavy stages need parallelism ∝ OUTPUT, which AQE
     // cannot see; one cheap round-robin exchange of the m-row e1 side
-    // spreads the enumeration across every core (probe `trifan`).
+    // spreads the enumeration across every core.
     // Only on the broadcast path: past the gate the wedge join is a
     // sort-merge whose exchange already repartitions e1.
-    val e1 = if (fanOut && mEdges <= bcastMax)
+    val e1 = if (mEdges <= bcastMax)
       oriented.repartition(edges.sparkSession.sparkContext.defaultParallelism)
     else oriented
     val wedges = e1.as("e1")

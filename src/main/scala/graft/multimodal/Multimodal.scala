@@ -417,91 +417,22 @@ object Multimodal {
     h
   }
 
-  /** Near-pairs via explicit posting-list chunk-spread — the AQE-OFF
-    * remedy for the hot-band corpus (all-black frames: identical sigs
-    * collapse into ONE band bucket whose pair count is quadratic in
-    * the bucket; that volume is inherent to the pair-output contract,
-    * so the job is to DISTRIBUTE it). Oversized postings are cut into
-    * sorted chunks and pairs generated per CHUNK PAIR, repartitioned
-    * so one hot band's work spreads across the cluster instead of
-    * pinning a task — dd02's remedy, carrying (id, sig) structs so no
-    * join-back is needed. Same result set as [[hammingPairs]] (probe
-    * mm04hot asserts it); shipped mm04 uses the join form, which AQE
-    * skew-splits at runtime and which measures faster.
-    */
-  def hammingPairsChunked(sig: DataFrame, maxHamming: Int): DataFrame = {
-    val chunk = 128
-    val postings = sig.toDF("doc_id", "sig")
-      .select(col("doc_id"), col("sig"),
-        posexplode(expr("transform(sequence(0, 3), b -> (sig >> (b * 16)) & 65535L)")))
-      .toDF("doc_id", "sig", "band", "bh")
-      // sorted (doc_id, sig) postings: struct sort is by first field,
-      // so slice-ahead pair generation keeps id1 < id2 for free
-      .groupBy("band", "bh")
-      .agg(sort_array(collect_set(struct(col("doc_id"), col("sig")))).as("ds"))
-      .filter(size(col("ds")) > 1)
-    // common case — bucket fits one chunk: direct pair explode
-    val smallPairs = postings.filter(size(col("ds")) <= chunk)
-      .select(explode(expr(
-        """flatten(transform(ds, (x, i) ->
-          |  transform(slice(ds, i + 2, size(ds)), y ->
-          |    struct(x.doc_id AS id1, x.sig AS sig1,
-          |           y.doc_id AS id2, y.sig AS sig2))))""".stripMargin)).as("p"))
-    // oversized buckets only: chunk-pair rows, repartitioned so one
-    // hot band's ≤ chunk² pair batches spread across tasks. The pair
-    // index is generated in TWO chained explodes (ci, then cj >= ci):
-    // each generated array is ≤ nChunks long, and the slices project
-    // out before the exchange — the r17 single flatten built all
-    // nChunks² index structs as ONE in-row array, which for a
-    // multi-million-row hot bucket is quadratic in-row state that can
-    // OOM a task before any spreading happens
-    val bigPairs = postings.filter(size(col("ds")) > chunk)
-      .withColumn("nc", expr(s"int(ceil(size(ds) / $chunk.0))"))
-      .select(col("ds"), col("nc"), explode(expr("sequence(0, nc - 1)")).as("ci"))
-      .select(col("ds"), col("ci"), explode(expr("sequence(ci, nc - 1)")).as("cj"))
-      .select(expr(s"slice(ds, ci * $chunk + 1, $chunk)").as("a"),
-        expr(s"slice(ds, cj * $chunk + 1, $chunk)").as("b"),
-        (col("ci") === col("cj")).as("same"))
-      .repartition(col("a"), col("b"))
-      .select(explode(expr(
-        """CASE WHEN same THEN
-          |  flatten(transform(a, (x, i) ->
-          |    transform(slice(a, i + 2, size(a)), y ->
-          |      struct(x.doc_id AS id1, x.sig AS sig1,
-          |             y.doc_id AS id2, y.sig AS sig2))))
-          |ELSE
-          |  flatten(transform(a, x -> transform(b, y ->
-          |    struct(x.doc_id AS id1, x.sig AS sig1,
-          |           y.doc_id AS id2, y.sig AS sig2))))
-          |END""".stripMargin)).as("p"))
-    smallPairs.unionAll(bigPairs)
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2"),
-        expr("bit_count(p.sig1 ^ p.sig2)").cast("long").as("hamming"))
-      // filter BEFORE distinct: hamming is a function of the pair, so
-      // the order is result-identical, but band collisions far
-      // outnumber verified near-pairs — dedup only the survivors
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
   /** The shipped near-pair plan: the band-bucket EQUI-JOIN. Unlike
     * dd02's posting-explode (whose chunk² pairs land in one
-    * unsplittable ROW, forcing the chunk-spread above), a join key's
-    * skew is runtime-splittable — AQE's OptimizeSkewedJoin spreads a
-    * hot band's quadratic output across tasks by splitting the
-    * oversized partition and replicating the matching side. Measured
-    * (ScaleProbe `mm04hot`, 2M sigs, 8192-doc hot band, local[32]):
-    * join 44 s (AQE) / 38 s (off) vs 84 s chunked — the posting
-    * groupBy+repartition costs more than it saves at local scale,
-    * where the verify-shuffle dominates (per the probe-honesty
-    * discipline, the local numbers bound overhead; the one-task
-    * pinning they can't exhibit is what AQE's split addresses on a
-    * cluster). [[hammingPairsChunked]] is kept as the explicit
-    * remedy for AQE-off deployments. A truly degenerate corpus
-    * (millions of IDENTICAL sigs) breaks the pair CONTRACT itself —
-    * the clique is quadratic no matter the plan; collapse hamming-0
-    * groups to representatives first (exact groupBy on sig, dd01
-    * style) and band only representatives.
+    * unsplittable ROW, forcing a chunk-spread), a join key's skew is
+    * runtime-splittable — AQE's OptimizeSkewedJoin spreads a hot
+    * band's quadratic output across tasks by splitting the oversized
+    * partition and replicating the matching side. Measured (2M sigs,
+    * 8192-doc hot band, local[32]): join 44 s (AQE) / 38 s (off) vs
+    * 84 s for dd02's posting chunk-spread carrying (id, sig) structs
+    * — the posting groupBy+repartition costs more than it saves at
+    * local scale, where the verify-shuffle dominates (the local
+    * numbers bound overhead; the one-task pinning they can't exhibit
+    * is what AQE's split addresses on a cluster). A truly degenerate
+    * corpus (millions of IDENTICAL sigs) breaks the pair CONTRACT
+    * itself — the clique is quadratic no matter the plan; collapse
+    * hamming-0 groups to representatives first (exact groupBy on sig,
+    * dd01 style) and band only representatives.
     */
   def hammingPairs(sig: DataFrame, maxHamming: Int): DataFrame = {
     val bands = sig.toDF("doc_id", "sig")
@@ -554,7 +485,7 @@ object Multimodal {
     * the rep-pairs and the connected components are identical to the
     * full enumeration's). Shipped mm04 keeps the direct form: on a
     * non-degenerate corpus the collapse's extra shuffle+join buys
-    * nothing (probe `mm04hot` measures the direct forms).
+    * nothing.
     */
   def hammingPairsCollapsed(sig: DataFrame,
                             maxHamming: Int): (DataFrame, DataFrame) = {

@@ -51,14 +51,11 @@ trait MergeTableStorage { this: MergeTable.type =>
     *    keep the sampled plan.
     *  - `nFiles == 1`: RangePartitioner computes no bounds for a
     *    single partition — never evaluated twice to begin with.
-    *  - otherwise: the classic sampled `repartitionByRange`.
-    *    `spark.graft.rangeWriteBarrier=true` additionally pins the
-    *    input with a lazy localCheckpoint so the sample reads blocks
-    *    — MEASURED SLOWER than the re-evaluation on this host for
-    *    both generated and parquet-backed inputs (ScaleProbe
-    *    `rangebarrier`: write 2.59 vs 2.14 s, merge 3.75 vs 3.14 s at
-    *    20M rows), so it defaults OFF and exists for re-measuring on
-    *    hosts where input recomputation is genuinely expensive.
+    *  - otherwise: the classic sampled `repartitionByRange`. Pinning
+    *    the input with a lazy localCheckpoint so the sample reads
+    *    blocks was MEASURED SLOWER than the re-evaluation for both
+    *    generated and parquet-backed inputs (write 2.59 vs 2.14 s,
+    *    merge 3.75 vs 3.14 s at 20M rows), so the input is not pinned.
     */
   private[operators] def stageRangeWrite(df: DataFrame, nFiles: Int,
       partCols: Seq[Column], staging: String,
@@ -79,10 +76,7 @@ trait MergeTableStorage { this: MergeTable.type =>
           .repartitionByBucket(df.withColumn("__rb", bucket), "__rb", sp.size + 1)
         (dropCols :+ "__rb").foldLeft(parted)(_ drop _).write.parquet(staging)
       case None =>
-        val barrier = n > 1 && df.sparkSession.conf
-          .get("spark.graft.rangeWriteBarrier", "false") == "true"
-        val pinned = if (barrier) df.localCheckpoint(false) else df
-        dropCols.foldLeft(pinned.repartitionByRange(n, partCols: _*))(_ drop _)
+        dropCols.foldLeft(df.repartitionByRange(n, partCols: _*))(_ drop _)
           .write.parquet(staging)
     }
   }
@@ -106,8 +100,8 @@ trait MergeTableStorage { this: MergeTable.type =>
     * default 4M): the bucket shuffle pays an interpreted per-row hop
     * the native codegen'd exchange doesn't, so past a few million
     * rewritten rows the avoided sampling evaluation stops paying for
-    * it (ScaleProbe `rangebarrier`: merge 1.03 vs 1.26 s at 2M rows
-    * — bounds win 18% — but 4.3 vs 3.46 s at 20M — sampled wins).
+    * it (measured: merge 1.03 vs 1.26 s at 2M rows — bounds win 18%
+    * — but 4.3 vs 3.46 s at 20M — sampled wins).
     * Small frequent band rewrites (the streaming upsert sink's
     * micro-batches, DML against a day's band) are scheduling-bound
     * and skip the sampling job; bulk maintenance rewrites stay on the

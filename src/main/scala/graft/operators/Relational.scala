@@ -380,20 +380,21 @@ object Relational {
     // the per-µs dedup aggregate, the grid bounds and the user grid
     // each consumed their own full scan — a lazy localCheckpoint of
     // the 3-column projection pins the scan once and all three read
-    // the pinned blocks. SIZE-GATED (driver-side file stat): the pin
-    // measured 1.6× faster at a 10× corpus (q55 12.2 → 7.5 s at 32
-    // cores) but ~0.3 s SLOWER at sf0.1, where three column-pruned
-    // scans of a 2 MB file cost less than materializing blocks — so
-    // small inputs keep the re-scan plan (the same
-    // recompute-vs-materialize trade change 1's barrier probe
-    // measured, decided per input).
+    // the pinned blocks. SIZE-GATED (driver-side stat through the
+    // Hadoop FileSystem, so file:/, HDFS and object-store corpus paths
+    // size correctly): the pin measured 1.6× faster at a 10× corpus
+    // (q55 12.2 → 7.5 s at 32 cores) but ~0.3 s SLOWER at sf0.1, where
+    // three column-pruned scans of a 2 MB file cost less than
+    // materializing blocks — so small inputs keep the re-scan plan
+    // (the same recompute-vs-materialize trade the range-write
+    // barrier measured, decided per input).
     val pinMinBytes = s.conf
       .get("spark.graft.resample.pinMinBytes", (8L << 20).toString).toLong
-    val evPath = new java.io.File(s"$d/events.parquet")
+    val evPath = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
     val evBytes =
-      if (evPath.isDirectory)
-        Option(evPath.listFiles()).map(_.map(_.length()).sum).getOrElse(0L)
-      else evPath.length()
+      try evPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(evPath).getLength
+      catch { case _: java.io.FileNotFoundException => 0L }
     val base0 = Tables.events(s, d).select("user_id", "ts", "value")
     val base = if (evBytes >= pinMinBytes) base0.localCheckpoint(false) else base0
     val ev = base

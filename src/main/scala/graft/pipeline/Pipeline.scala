@@ -437,8 +437,7 @@ object Pipeline {
     * range-partition → per-bucket totals → prefix offsets over the
     * (nParts)-row bucket table → bucket-local running sum + offset.
     * Input (doc_id, n); output adds `cum`. No window ever sees more
-    * than one bucket's rows. Shared with [[graft.ScaleProbe]] so the
-    * measured plan IS the shipped plan.
+    * than one bucket's rows.
     */
   private[graft] def globalCumSum(toks: DataFrame, nParts: Int = 32): DataFrame = {
     // internal columns __-prefixed (Quantiles' collision-hygiene rule,

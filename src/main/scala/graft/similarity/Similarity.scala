@@ -747,9 +747,9 @@ object Similarity {
     * The real cost axis is CANDIDATE volume: n × nProbe × cell
     * occupancy. Bounded occupancy — nCells ∝ corpus, the faiss sizing
     * rule — keeps it linear in n where brute is n². Measured
-    * (ScaleProbe `knnjoin`, occupancy 500, nProbe 3): 250k → 1M
-    * vectors moved candidates 403M → 2.06G (≈ linear; n² would be
-    * 1e12, 486× more) and wall 38 s → 134 s on 32 local threads.
+    * (occupancy 500, nProbe 3): 250k → 1M vectors moved candidates
+    * 403M → 2.06G (≈ linear; n² would be 1e12, 486× more) and wall
+    * 38 s → 134 s on 32 local threads.
     *
     * Tombstone governance is SYMMETRIC: the index's live tombstone
     * set filters the candidate side (a deleted vector never appears
@@ -887,22 +887,6 @@ object Similarity {
       loadCentroids(s, indexDir, graft.operators.IndexManifest.head(indexDir)),
       nProbe)
 
-  /** Distributed routing introspection: every corpus row's probed
-    * cells as (vec_id, cell) — the same codegen'd pass ann09/probeIvf
-    * route with, exposed so the `knnjoin` scale probe can compute the
-    * EXACT candidate volume (Σ_cell routed(cell) × |cell|) without
-    * re-deriving routing driver-side one vector at a time.
-    */
-  private[graft] def routedCells(s: SparkSession, indexDir: String,
-                                 corpus: DataFrame, nProbe: Int): DataFrame = {
-    val cents = loadCentroids(s, indexDir,
-      graft.operators.IndexManifest.head(indexDir))
-    corpus.select(col("vec_id"), col("v").as("va"))
-      .withColumn("cell",
-        explode(graft.functions.GraftFunctions.nearestCells("va", cents, nProbe)))
-      .select("vec_id", "cell")
-  }
-
   /** Driver-side mirror of the NearestCells routing (top-n cells by
     * dot, ties to the lower id) for the collected query set.
     */
@@ -956,7 +940,7 @@ object Similarity {
     * NearestCells routing the probe uses and PQ-encoded against the
     * EXISTING codebooks — one narrow map over the batch, then an
     * append into the cell-segmented layout. Cost ∝ batch, never
-    * corpus (ScaleProbe `annappend` measures it); resident vectors
+    * corpus (measured); resident vectors
     * are never reassigned or rewritten. Probes pick the rows up on
     * their next scan with no cache to invalidate: the session memo
     * holds only the index DIR, and both probe modes re-list the cell
@@ -1410,9 +1394,7 @@ object Similarity {
                        ksub: Int = pqKsub, iters: Int = 10): Array[Array[Array[Double]]] =
     trainPqBooksOf(vecs(s, d), m, ksub, iters)
 
-  /** Training body over any (vec_id, v, nrm) frame — shared with the
-    * scale probe so its measurement can't drift from the shipped code.
-    */
+  /** Training body over any (vec_id, v, nrm) frame. */
   def trainPqBooksOf(vdf: DataFrame, m: Int = pqM, ksub: Int = pqKsub,
                      iters: Int = 10): Array[Array[Array[Double]]] = {
     val sample = vdf.select(col("vec_id"), col("v"), col("nrm"))

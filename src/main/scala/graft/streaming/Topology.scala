@@ -136,9 +136,9 @@ object Bolts {
     * drop; not-contains → definitely-unseen → keep. The whole
     * micro-batch is one narrow codegen'd filter (ThreadLocal-probed
     * unboxed binary search per row; the exact probe measured 5.5×
-    * over the bloom path at 1B rows on a range-shaped dim —
-    * ScaleProbe `bitmap64`), where the bloom bolt must still
-    * exact-join its might-contain sliver every batch. Sketch size is
+    * over the bloom path at 1B rows on a range-shaped dim), where
+    * the bloom bolt must still exact-join its might-contain sliver
+    * every batch. Sketch size is
     * the dial that picks between the two: run containers make a
     * range-shaped domain ~8 B per contiguous chunk (measured: 25M
     * contiguous keys → 8.3 KB), but a uniformly RANDOM 64-bit domain

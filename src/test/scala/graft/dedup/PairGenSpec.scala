@@ -64,9 +64,9 @@ class PairGenSpec extends SparkSpecBase {
   test("dd02 and dd09 registered outputs are unchanged by the generator") {
     // the operator-level pin: same rows as a recompute through the
     // reference pair generator (lambda form), end to end at spec SF
-    val sh = Dedup.probeShingles(spark, sfDir)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val postings = Dedup.probePostings(spark, sfDir)
+    val sizes = Dedup.shingles(spark, sfDir).groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val postings = Dedup.cappedIndex(spark, sfDir).groupBy("s")
+      .agg(sort_array(collect_set("doc_id")).as("ds"))
     val refPairs = postings
       .select(explode(expr(
         """flatten(transform(ds, (x, i) ->
@@ -81,7 +81,7 @@ class PairGenSpec extends SparkSpecBase {
           (col("n1") + col("n2") - col("inter"))) * 10000) / 10000).as("jacc"))
       .filter(col("jacc") >= 0.2)
       .collect().map(_.toSeq).toSet
-    val got = Dedup.probePairs(spark, sfDir).collect().map(_.toSeq).toSet
+    val got = Dedup.buildJaccardPairs(spark, sfDir).collect().map(_.toSeq).toSet
     assert(got == refPairs, s"dd02 pair set changed: ${got.size} vs ${refPairs.size}")
   }
 }

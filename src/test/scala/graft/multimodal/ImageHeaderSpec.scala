@@ -66,27 +66,23 @@ class ImageHeaderSpec extends SparkSpecBase {
     val got = Multimodal.hammingPairs(sig, maxHamming = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set((1L, 2L, 2L), (1L, 4L, 0L), (2L, 4L, 2L)), s"got $got")
-  }
 
-  test("hammingPairsChunked == hammingPairs across the chunk boundary (hot band)") {
-    import spark.implicits._
-    // 200 identical sigs (an all-black-frames bucket, > chunk=128 so
-    // the oversized-posting branch runs: same-chunk, cross-chunk and
-    // the small-posting path all exercised) + a diverse background
-    // with a couple of genuine near pairs
-    val hot = (0L until 200L).map(i => (i, -1L))
-    val bg = (200L until 400L).map(i => (i, i * 0x9e3779b97f4a7c15L))
-    val near = Seq((400L, 0x0123456789abcdefL), (401L, 0x0123456789abcdecL))
-    val sig = (hot ++ bg ++ near).toDF("doc_id", "sig")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val joined = pairs(Multimodal.hammingPairs(sig, maxHamming = 10))
-    val chunked = pairs(Multimodal.hammingPairsChunked(sig, maxHamming = 10))
-    assert(joined == chunked,
-      s"plans disagree: only-join=${joined -- chunked}, only-chunked=${chunked -- joined}")
-    // the hot clique is complete: 200*199/2 hamming-0 pairs
-    assert(joined.count(_._3 == 0L) >= 200 * 199 / 2)
-    assert(joined.contains((400L, 401L, 2L)))
+    // hot band: 200 identical sigs (an all-black-frames bucket) over a
+    // diverse background — the join must enumerate the whole clique and
+    // match a driver-side band-sharing reference exactly
+    val all = (0L until 200L).map(i => (i, -1L)) ++
+      (200L until 400L).map(i => (i, i * 0x9e3779b97f4a7c15L)) ++
+      Seq((400L, 0x0123456789abcdefL), (401L, 0x0123456789abcdecL))
+    def bands(x: Long) = (0 until 4).map(b => (b, (x >>> (b * 16)) & 0xffffL)).toSet
+    val want = (for {
+      (a, sa) <- all; (b, sb) <- all if a < b
+      h = java.lang.Long.bitCount(sa ^ sb)
+      if h <= 10 && (bands(sa) & bands(sb)).nonEmpty
+    } yield (a, b, h.toLong)).toSet
+    val hot = Multimodal.hammingPairs(all.toDF("doc_id", "sig"), maxHamming = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(want.count(_._3 == 0L) == 200 * 199 / 2 && want.contains((400L, 401L, 2L)))
+    assert(hot == want, s"only-join=${hot -- want}, only-reference=${want -- hot}")
   }
 
   test("hammingPairsCollapsed: degenerate corpus bounded, clusters equal the full enumeration") {

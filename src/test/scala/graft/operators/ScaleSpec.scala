@@ -237,6 +237,29 @@ class ScaleSpec extends SparkSpecBase {
       s"scale-hostile join shape in: ${offenders.mkString("; ")}")
   }
 
+  test("q40: the resample pin's size gate reads a file: URI corpus path") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec}
+    val q40 = graft.SparkEntry.queries("q40_resample_ffill")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    // any non-empty events file clears a 1-byte gate, so the plan must
+    // read events once, through the pinned RDD, never a file scan
+    val pinned = spark.newSession()
+    pinned.conf.set("spark.graft.resample.pinMinBytes", "1")
+    val df = q40(pinned, "file:" + sfDir)
+    val plan = df.queryExecution.sparkPlan
+    val eventScans = plan.collect {
+      case f: FileSourceScanExec
+        if f.relation.location.rootPaths.exists(_.getName == "events.parquet") => f
+    }
+    assert(eventScans.isEmpty, s"events re-scanned past the pin:\n$plan")
+    val rdds = plan.collect { case r: RDDScanExec => r.rdd.id }.distinct
+    assert(rdds.size == 1, s"expected one pinned events RDD, got $rdds:\n$plan")
+    // the pin is a physical choice: same rows as the unpinned plan
+    val unpinned = spark.newSession()
+    unpinned.conf.set("spark.graft.resample.pinMinBytes", Long.MaxValue.toString)
+    assert(rows(df) == rows(q40(unpinned, sfDir)))
+  }
+
   test("SQL registration: graft_* functions callable from spark.sql") {
     GraftExtensions.register(spark)
     val row = spark.sql(
